@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: load each Verify output
 parquet, run the matching oracle SQL in DuckDB over the same sf tables, sort
-columns by name + rows by value, and diff. Usage:
+columns by name + rows by value, and diff. Every oracle_sql.json key without
+an output (a slot that threw in Verify writes none) counts as a FAIL. Exits
+non-zero on any FAIL. Usage:
     python3 scripts/oracle_check.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, os
@@ -22,12 +24,14 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 ok, bad, weak = [], [], []
+seen = set()
 for path in sorted(glob.glob(os.path.join(out_dir, "*"))):
     name = os.path.basename(path)
     if name.endswith(".parquet"):
         name = name[:-len(".parquet")]
     if not os.path.isdir(path):
         continue
+    seen.add(name)
     spark_df = pd.concat([pd.read_parquet(p) for p in glob.glob(path + "/*.parquet")]) \
         if glob.glob(path + "/*.parquet") else pd.DataFrame()
     if name not in oracle:
@@ -50,6 +54,11 @@ for path in sorted(glob.glob(os.path.join(out_dir, "*"))):
         ok.append(name)
     except AssertionError as e:
         bad.append((name, str(e).split("\n")[0] + " | " + "\n".join(str(e).split("\n")[1:4])))
+
+# Verify writes each oracle under both "<name>" and "<name>.parquet"
+for name in sorted({k[:-len(".parquet")] if k.endswith(".parquet") else k for k in oracle}):
+    if name not in seen:
+        bad.append((name, "FAIL: missing output"))
 
 print(f"PASS {len(ok)}: {ok}")
 print(f"ROWS-ONLY {len(weak)}: {weak}")

@@ -41,13 +41,13 @@ import org.apache.spark.sql.functions._
   * source's out-degree. The maxCard eligibility cap bounds every VECTOR
   * (so per-pair work and the reference's RAM bound), but hub SOURCES still
   * expand quadratically; the reference tolerates this because it holds the
-  * whole graph in one heap. `maxSourceFanout` (DEFAULT 10 000 — the same
-  * magnitude as maxCard, so pair volume per source is hard-bounded at
-  * 10⁸ and the uncapped quadratic path must be opted into with ≤ 0) drops
-  * hub sources from candidate generation. That is an explicit
-  * approximation: a pair whose overlap is hub-only loses those candidates
-  * — but note such pairs already score 0 on the weighted gate unless the
-  * hub is ALSO an eligible dest (source-only ids carry weight 0), so the
+  * whole graph in one heap. `maxSourceFanout` (default 0 = uncapped, the
+  * exact reference answer) is an explicit opt-in approximation for
+  * scale-sensitive callers: a positive cap (e.g. 10 000, the magnitude of
+  * maxCard, bounding pair volume per source at 10⁸) drops hub sources from
+  * candidate generation, so a pair whose overlap is hub-only loses those
+  * candidates — but such pairs already score 0 on the weighted gate unless
+  * the hub is ALSO an eligible dest (source-only ids carry weight 0), so the
   * cap's observable effect is confined to eligible-dest mega-hubs. Norms
   * (sumw) always run over the UNCAPPED membership.
   * Everything downstream is per-pair aggregation + a per-focus top-k
@@ -64,7 +64,7 @@ object AdjacencyOps {
                        maxCard: Int = 10000,
                        topK: Int = 128,
                        threshold: Double = 0.1,
-                       maxSourceFanout: Int = 10000): DataFrame = {
+                       maxSourceFanout: Int = 0): DataFrame = {
     val l = links.select(col("src").cast("long").as("src"),
                          col("dst").cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)

@@ -702,6 +702,8 @@ object VectorOps {
   def appendIvfPqIndex(emb: DataFrame, dir: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
+    val first = emb.select(col("embedding")).as[Array[Float]].take(1)
+    if (first.isEmpty) return // empty batch: the stored index stays as it is
     val centers = spark.read.parquet(s"$dir/centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
     val books = spark.read.parquet(s"$dir/books")
@@ -714,8 +716,7 @@ object VectorOps {
     // fail fast on the driver: a dim-mismatched append would otherwise die
     // mid-job with an opaque AIOOBE inside an executor task (short vectors)
     // or silently score tail dims against shorter centroids (long vectors)
-    val dim = emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .head()._2.length
+    val dim = first.head.length
     require(dim == centers.head.length && dim == books.length * sub,
       s"appendIvfPqIndex: embedding dim $dim does not match the stored index " +
         s"(coarse dim ${centers.head.length}, m=${books.length} x sub=$sub)")

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.build.IndexBuilder
 import graft.core._
 import graft.tables.Snapshots
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -130,29 +131,47 @@ final case class SearchResult(
 
 /** Distributed BM25 top-k query engine over a committed index snapshot.
   *
-  * Physical plan per query (SURVEY §3.1 Spark rebuild):
-  *   1. driver planner: term hashes + df lookup from term_stats (scan pruned
-  *      to the terms' hash buckets — partition pruning is the pushdown)
-  *   2. scan posting blocks of the query's terms only (bucket-pruned),
-  *      further pruned to the doc ranges of the rarest include term
-  *      (the reference orders terms by selectivity the same way,
-  *      SearchIndex.compareKeywords:159-171)
-  *   3. one shuffle of those blocks by docRange co-locates every term's
-  *      postings for the same doc range with the forward block
-  *   4. mapPartitions kernel: block-max WAND over doc ranges — ranges whose
-  *      score upper bound (from per-block max position counts + the range's
-  *      domain rank) cannot beat the partition's current capped top-k are
-  *      skipped without decoding; surviving ranges run galloping sorted
-  *      intersection (J1) with skip-pointer group decode, merge exclusion
-  *      (J2), metadata filter (F7), and exact scoring (R1-R9)
-  *   5. tiny collect of per-partition capped top sets; final comparator +
-  *      per-domain cap (A8/O3) on the driver.
+  * Planner (driver): `near:`/domain resolution, query variants, term hashes,
+  * and ONE df lookup ([[QueryEngine.Index.termStatsFor]] — the pinned stats
+  * map, else a term_stats scan pruned to the terms' hash buckets). The
+  * posting scan is pruned to the live terms' buckets and, under a domain
+  * restriction with known ranks, to their doc_range rank prefixes. The
+  * candidate universe is the doc ranges of each subquery's rarest include
+  * term (the reference orders terms by selectivity the same way,
+  * SearchIndex.compareKeywords:159-171).
   *
-  * At 1000-executor scale the only data motion is the query's own posting
-  * blocks (a few MB for typical terms) — never the corpus. Ranges arrive
-  * rank-sorted (doc_range ascending = best domain rank first), so the WAND
-  * threshold tightens early, mirroring the reference's rank-encoded posting
-  * order (ReverseIndexFullConverter.java:160-182).
+  * Evaluation then takes the FIRST of five paths that applies; all return
+  * identical results (RankIdentitySpec, OpsSpec), only jobs and data motion
+  * differ:
+  *   1. single-job fast path — the handle pins forward blocks
+  *      (`Index.fwdRowCache`: `docCount <= cacheDocLimit`) and Σ df over the
+  *      query's terms is ≤ `localEvalMaxPostings * 16` (≤
+  *      `localEvalMaxPostings` for a budgeted query whose `fetchBudget` can
+  *      bite): one posting fetch job, driver kernel.
+  *   2. budgeted prefetch — `fetchBudget > 0` on a cached handle under the
+  *      same 16× cap: one fetch job up front, then paths 3/4 run over
+  *      driver-local slices of the prefetched rows.
+  *   3. one-shot directory — otherwise a block directory (term, range, n,
+  *      block max) is collected; when the matchable ranges' postings plus
+  *      forward volume fit `localEvalMaxPostings`, one fetch of them all and
+  *      the driver kernel.
+  *   4. progressive WAND with spill — `localEvalMaxPostings > 0`: batched
+  *      fetches in ascending-bound order (champion/rank order when
+  *      `fetchBudget > 0`), one running [[QueryKernel.Selection]] whose
+  *      threshold drops ranges that cannot beat it; past
+  *      `localEvalMaxPostings * 64` fetched postings (exact mode) the residue
+  *      spills to the distributed kernel, seeded with that threshold.
+  *   5. distributed — `localEvalMaxPostings == 0`: one shuffle by doc_range
+  *      co-locates each range's posting and forward blocks; a mapPartitions
+  *      block-max WAND kernel (galloping intersection J1, exclusion J2,
+  *      metadata filter F7, exact scoring R1-R9) emits capped top sets.
+  *
+  * Every path ends in the same final selection: the reference comparator
+  * ([[Candidate.referenceOrder]]) and per-domain cap ([[Candidate.capped]])
+  * on the driver (A8/O3). Ranges arrive rank-sorted (doc_range ascending =
+  * best domain rank first), so the WAND threshold tightens early, mirroring
+  * the reference's rank-encoded posting order
+  * (ReverseIndexFullConverter.java:160-182).
   */
 object QueryEngine {
 
@@ -220,6 +239,17 @@ object QueryEngine {
         Some(termStats.select("term_hash", "df_full", "df_prio").collect()
           .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap)
       else None
+    /** term_hash → (df_full, df_prio) for `hashes` (absent terms omitted):
+      * a driver-local lookup in [[statsCache]], else one term_stats scan
+      * pruned to the hashes' buckets (partition pruning is the pushdown). */
+    def termStatsFor(hashes: Seq[Long]): Map[Long, (Long, Long)] = statsCache match {
+      case Some(m) => hashes.flatMap(h => m.get(h).map(h -> _)).toMap
+      case None =>
+        val buckets = hashes.map(IndexBuilder.bucketOf(_, manifest.numBuckets)).distinct
+        termStats.where(col("bucket").isin(buckets: _*) && col("term_hash").isin(hashes: _*))
+          .select("term_hash", "df_full", "df_prio").collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    }
     /** `near:` neighborhood table (repo, neighbor_id, neighbor_rank),
       * present when the snapshot ran IndexBuilder.writeDomainNeighbors. A
       * post-build stage, so detected by its _DONE marker rather than the
@@ -268,22 +298,20 @@ object QueryEngine {
 
   def open(root: String): Index = open(root, SparkSession.active)
 
-  def open(root: String, spark: SparkSession): Index = {
-    val m = Snapshots.currentManifest(root).getOrElse(
+  def open(root: String, spark: SparkSession): Index =
+    new Index(root, committedManifest(root), spark)
+
+  private def committedManifest(root: String): Snapshots.Manifest =
+    Snapshots.currentManifest(root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
-    new Index(root, m, spark)
-  }
 
   /** Open with every driver cache OFF — the code paths a >4M-doc snapshot
     * takes (per-query pruned stats / directory / forward jobs instead of
     * pinned maps). Results are identical to a cached handle
     * (RankIdentitySpec extends its path identity here); this exists so the
     * big-index serving tier is measurable on any snapshot. */
-  def openUncached(root: String, spark: SparkSession): Index = {
-    val m = Snapshots.currentManifest(root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root"))
-    new Index(root, m, spark, cacheDocLimit = 0L)
-  }
+  def openUncached(root: String, spark: SparkSession): Index =
+    new Index(root, committedManifest(root), spark, cacheDocLimit = 0L)
 
   /** Open a SPECIFIC snapshot by id — committed or merely staged. Staged
     * handles are the parts of a live view ([[searchParts]]): the committed
@@ -306,34 +334,39 @@ object QueryEngine {
   private final case class LiveStats(
       statsFor: Seq[Long] => Map[Long, (Long, Long)], docCount: Long)
 
+  /** `near:` resolution (reference DbNearDomainsQuery): the repo's
+    * neighborhood (self + linked domains, ≤ the build-time maxNeighbors cap)
+    * becomes the domain restriction, plus the neighbors' posting-order ranks
+    * for scan pruning — one filter+collect on the tiny `neighbors` table.
+    * None = unknown repo (empty neighborhood ⇒ empty result). Without a
+    * table the restriction degrades to the site itself via the repo's
+    * synthetic advice term. */
+  private def resolveNear(spec: QuerySpec, neighbors: Option[DataFrame]): Option[QuerySpec] =
+    (spec.nearRepo, neighbors) match {
+      case (None, _) => Some(spec)
+      case (Some(r), None) =>
+        Some(spec.copy(nearRepo = None, subqueries = spec.subqueries.map(sq =>
+          sq.copy(advice = (sq.advice :+ s"repo:$r").distinct))))
+      case (Some(r), Some(nb)) =>
+        val rows = nb.where(col("repo") === r)
+          .select(col("neighbor_id"), col("neighbor_rank")).collect()
+        if (rows.isEmpty) None
+        else Some(spec.copy(nearRepo = None,
+          domains = (spec.domains ++ rows.map(_.getInt(0))).distinct,
+          // rank pruning is sound only when the rank set covers ALL
+          // restricted domains — i.e. when `near:` is the sole restriction
+          domainRanks =
+            if (spec.domains.nonEmpty) Nil
+            else rows.map(_.getInt(1)).distinct.toSeq))
+    }
+
   private def search(spark: SparkSession, index: Index, specIn: QuerySpec,
                      liveStats: Option[LiveStats]): Seq[SearchResult] = {
     import spark.implicits._
 
-    // `near:` resolution (reference DbNearDomainsQuery): the repo's
-    // neighborhood (self + linked domains, ≤ the build-time cap) becomes the
-    // domain restriction, plus the neighbors' posting-order ranks for scan
-    // pruning. One filter+collect on the tiny neighbors table, bounded by
-    // the build-time maxNeighbors cap. Snapshots without the table degrade
-    // to the site restriction itself via the repo's synthetic advice term.
-    val specNear: QuerySpec = specIn.nearRepo match {
-      case None => specIn
-      case Some(r) => index.domainNeighbors match {
-        case Some(nb) =>
-          val rows = nb.where(col("repo") === r)
-            .select(col("neighbor_id"), col("neighbor_rank")).collect()
-          if (rows.isEmpty) return Nil // unknown site ⇒ empty neighborhood
-          specIn.copy(nearRepo = None,
-            domains = (specIn.domains ++ rows.map(_.getInt(0))).distinct,
-            // rank pruning is sound only when the rank set covers ALL
-            // restricted domains — i.e. when `near:` is the sole restriction
-            domainRanks =
-              if (specIn.domains.nonEmpty) Nil
-              else rows.map(_.getInt(1)).distinct.toSeq)
-        case None =>
-          specIn.copy(nearRepo = None, subqueries = specIn.subqueries.map(sq =>
-            sq.copy(advice = (sq.advice :+ s"repo:$r").distinct)))
-      }
+    val specNear: QuerySpec = resolveNear(specIn, index.domainNeighbors) match {
+      case Some(sp) => sp
+      case None     => return Nil // unknown site ⇒ empty neighborhood
     }
 
     // Explicit domain restrictions (search sets, S8) get the same rank-
@@ -360,6 +393,9 @@ object QueryEngine {
       else sq
     }
 
+    // query terms must hash to the index's stored form: when the snapshot was
+    // built with Porter stemming (C2), stem everything except synthetic
+    // `:`-terms — same rule the tokenizer applied at build time
     def stored(t: String): String =
       if (index.manifest.stemming && !t.contains(":")) graft.analysis.Porter.stem(t) else t
 
@@ -442,19 +478,10 @@ object QueryEngine {
       sq.include ++ sq.exclude ++ sq.priority ++ sq.advice) ++ q3Candidates ++
       posCandidates).distinct
     if (allTerms.isEmpty || spec.subqueries.forall(_.include.isEmpty)) return Nil
-    // query terms must hash to the index's stored form: when the snapshot was
-    // built with Porter stemming (C2), stem everything except synthetic
-    // `:`-terms — same rule the tokenizer applied at build time
-    val termHash: Map[String, Long] = allTerms.map { t =>
-      val stored =
-        if (index.manifest.stemming && !t.contains(":")) graft.analysis.Porter.stem(t)
-        else t
-      t -> Hashes.termHash(stored)
-    }.toMap
+    val termHash: Map[String, Long] = allTerms.map(t => t -> Hashes.termHash(stored(t))).toMap
     // hash set for the STATS lookup — includes gate candidates; the postings
     // scan's hash set is derived after gating, from live subqueries only
     val statsHashes = termHash.values.toSeq.distinct
-    val statsBuckets = statsHashes.map(h => IndexBuilderRef.bucketOf(h, index.manifest.numBuckets)).distinct
 
     // ---- planner metadata ---------------------------------------------------
     // With the handle's pinned stats (small snapshots): df lookups are
@@ -463,27 +490,9 @@ object QueryEngine {
     // Without the cache (the 10^12-doc regime): one tiny pruned term_stats
     // job answers selectivities BEFORE any directory data moves, so the
     // directory guard below can size its collect.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
-    val (dfFull: Map[Long, Long], dfPrio: Map[Long, Long]) = liveStats match {
-      case Some(gs) =>
-        val m = gs.statsFor(statsHashes)
-        (statsHashes.flatMap(h => m.get(h).filter(_._1 > 0L).map(h -> _._1)).toMap,
-         statsHashes.flatMap(h => m.get(h).map(h -> _._2)).toMap)
-      case None => index.statsCache match {
-        case Some(m) =>
-          (statsHashes.flatMap(h => m.get(h).filter(_._1 > 0L).map(h -> _._1)).toMap,
-           statsHashes.flatMap(h => m.get(h).map(h -> _._2)).toMap)
-        case None =>
-          val rows = index.termStats
-            .where($"bucket".isin(statsBuckets: _*) && $"term_hash".isin(statsHashes: _*))
-            .select($"term_hash", $"df_full", $"df_prio")
-            .collect()
-          (rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap,
-           rows.iterator.map(r => r.getLong(0) -> r.getLong(2)).toMap)
-      }
-    }
+    val stats = liveStats.fold(index.termStatsFor(statsHashes))(_.statsFor(statsHashes))
+    val dfFull: Map[Long, Long] = stats.collect { case (h, (f, _)) if f > 0L => h -> f }
+    val dfPrio: Map[Long, Long] = stats.map { case (h, (_, p)) => h -> p }
     val docCount = liveStats.map(_.docCount).getOrElse(index.manifest.docCount)
 
     // ---- Q3 gated variants (dash-combine / num-split / morph last word) ----
@@ -534,7 +543,7 @@ object QueryEngine {
     val hashes: Seq[Long] = liveSubqueries.flatMap(sq =>
       sq.include ++ sq.exclude ++ sq.priority ++ sq.advice ++ sq.coherences.flatten)
       .distinct.map(termHash).distinct
-    val buckets = hashes.map(h => IndexBuilderRef.bucketOf(h, index.manifest.numBuckets)).distinct
+    val buckets = hashes.map(h => IndexBuilder.bucketOf(h, index.manifest.numBuckets)).distinct
 
     // Domain restriction with known ranks (near:/site:/search-set
     // resolution) prunes the posting SCAN: doc_range = (rank << 32 | urlId)
@@ -604,6 +613,9 @@ object QueryEngine {
       lit(null).cast("array<bigint>").as("dom_skip_docs"),
       lit(null).cast("array<int>").as("dom_skip_offs"))
 
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
     // Parallel driver-local evaluation: ranges are interleaved across worker
     // threads (rank order spreads evenly), each thread runs its own Selection
     // seeded with the phase-start threshold (conservative — skips are exact),
@@ -813,6 +825,20 @@ object QueryEngine {
         fwdUnified(pruneToRanges(index.fwd, rs)).collect()
           .map(r => r.getLong(r.fieldIndex("doc_range")) -> r).toMap)
 
+    // ---- distributed kernel: one shuffle co-locates each range's posting and
+    // forward blocks; `seed` carries a WAND threshold already earned locally
+    def distributedKernel(rs: Array[Long], seed: Double): Array[Candidate] = {
+      val tagged = pruneToRanges(postings, rs).select(unifiedPostingCols: _*)
+        .unionByName(fwdUnified(pruneToRanges(index.fwd, rs)), allowMissingColumns = true)
+      val bSpec = spark.sparkContext.broadcast(kSpec.copy(seedThreshold = seed))
+      tagged
+        .repartition(col("doc_range"))
+        .sortWithinPartitions(col("doc_range"), col("term_hash"))
+        .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
+          org.apache.spark.sql.Encoders.product[Candidate])
+        .collect()
+    }
+
     // forward volume budget for the one-shot local path (uncached handles)
     val allRanges: Array[Long] = infos.map(_.range)
     val fwdInPlay: Long =
@@ -918,33 +944,12 @@ object QueryEngine {
       if (spill.isEmpty) return selectBest(local, spec)
       // pathological residue (fetch cap blown): finish distributed, seeding
       // the kernel gate with the threshold the local phase already earned
-      val kSpec2 = kSpec.copy(seedThreshold = sel.nonPrioThreshold)
-      val spillRanges = spill.map(_.range)
-      val tagged = pruneToRanges(postings, spillRanges).select(unifiedPostingCols: _*)
-        .unionByName(fwdUnified(pruneToRanges(index.fwd, spillRanges)), allowMissingColumns = true)
-      val bSpec = spark.sparkContext.broadcast(kSpec2)
-      val distCands = tagged
-        .repartition(col("doc_range"))
-        .sortWithinPartitions(col("doc_range"), col("term_hash"))
-        .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
-          org.apache.spark.sql.Encoders.product[Candidate])
-        .collect()
-      return selectBest(local ++ distCands, spec)
+      return selectBest(local ++ distributedKernel(spill.map(_.range), sel.nonPrioThreshold), spec)
     }
 
-    // ---- distributed kernel (localEvalMaxPostings == 0): one shuffle -------
-    val tagged = pruneToRanges(postings, allRanges).select(unifiedPostingCols: _*)
-      .unionByName(fwdUnified(pruneToRanges(index.fwd, allRanges)), allowMissingColumns = true)
-    val bSpec = spark.sparkContext.broadcast(kSpec)
-    val candidates = tagged
-      .repartition(col("doc_range"))
-      .sortWithinPartitions(col("doc_range"), col("term_hash"))
-      .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
-        org.apache.spark.sql.Encoders.product[Candidate])
-      .collect()
-    selectBest(candidates, spec)
+    // localEvalMaxPostings == 0: every planned range through the distributed kernel
+    selectBest(distributedKernel(allRanges, Double.PositiveInfinity), spec)
   }
-
   /** One block-directory entry: (term, planning range, postings, block-max
     * position count) — the planner's view of one posting block. */
   private[query] final case class DirRow(term: Long, range: Long, n: Int, maxPc: Int)
@@ -983,18 +988,12 @@ object QueryEngine {
     * reference counts its full candidate list (IndexQueryService:252-282),
     * which depends on how many beyond-cap candidates a path surfaced and
     * does not distribute (documented deviation). */
-  private def selectBest(candidates: Array[Candidate], spec: QuerySpec): Seq[SearchResult] = {
-    val ordered = candidates.sortBy(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
-    val domainCounts = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    val selected = scala.collection.mutable.ArrayBuffer.empty[Candidate]
-    ordered.foreach { c =>
-      domainCounts(c.domainId) += 1
-      if (domainCounts(c.domainId) <= spec.limitByDomain) selected += c
-    }
-    val top = selected.take(spec.limitTotal)
+  private[query] def selectBest(candidates: Array[Candidate], spec: QuerySpec): Seq[SearchResult] = {
+    val top = Candidate.capped(candidates.sorted.iterator, spec.limitByDomain)
+      .take(spec.limitTotal).toSeq
     val topCounts = top.groupBy(_.domainId).map { case (d, cs) => d -> cs.size.toLong }
     top.map(c => SearchResult(c.urlId, c.domainId, c.ranking, c.hasPrio, c.score,
-      topCounts(c.domainId))).toSeq
+      topCounts(c.domainId)))
   }
 
     /** J8: decorate search results with (repo, path, lang) from the snapshot's
@@ -1046,43 +1045,19 @@ object QueryEngine {
     }
 
     // `near:` must resolve against ONE neighbors table (deltas usually lack
-    // it); resolve on the first part that has one so every part sees the
-    // same restriction, same rules as the single-snapshot path
-    val spec: QuerySpec = specIn.nearRepo match {
-      case Some(r) =>
-        parts.find(_.domainNeighbors.nonEmpty).flatMap(_.domainNeighbors) match {
-          case Some(nb) =>
-            val rows = nb.where(col("repo") === r)
-              .select(col("neighbor_id"), col("neighbor_rank")).collect()
-            if (rows.isEmpty) return Nil
-            specIn.copy(nearRepo = None,
-              domains = (specIn.domains ++ rows.map(_.getInt(0))).distinct,
-              domainRanks =
-                if (specIn.domains.nonEmpty) Nil
-                else rows.map(_.getInt(1)).distinct.toSeq)
-          case None => specIn // every part degrades identically via advice
-        }
-      case None => specIn
-    }
+    // it): the first part that has one, so every part sees the same restriction
+    val spec: QuerySpec =
+      resolveNear(specIn, parts.iterator.flatMap(_.domainNeighbors).nextOption()) match {
+        case Some(sp) => sp
+        case None     => return Nil
+      }
 
     // global stats = per-part sums for the query's hashes; memoized — every
     // part resolves the same term set, so the cross-part lookup runs once
     val memo = new java.util.concurrent.ConcurrentHashMap[Seq[Long], Map[Long, (Long, Long)]]()
     def statsFor(hashes: Seq[Long]): Map[Long, (Long, Long)] =
       memo.computeIfAbsent(hashes, { hs =>
-        parts.map { p =>
-          p.statsCache match {
-            case Some(m) => hs.flatMap(h => m.get(h).map(h -> _)).toMap
-            case None =>
-              val buckets = hs.map(h =>
-                IndexBuilderRef.bucketOf(h, p.manifest.numBuckets)).distinct
-              p.termStats
-                .where(col("bucket").isin(buckets: _*) && col("term_hash").isin(hs: _*))
-                .select(col("term_hash"), col("df_full"), col("df_prio"))
-                .collect()
-                .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-          }
-        }.reduce { (a, b) =>
+        parts.map(_.termStatsFor(hs)).reduce { (a, b) =>
           (a.keySet ++ b.keySet).map { h =>
             val (af, ap) = a.getOrElse(h, (0L, 0L))
             val (bf, bp) = b.getOrElse(h, (0L, 0L))
@@ -1092,33 +1067,10 @@ object QueryEngine {
       })
     val live = LiveStats(statsFor, parts.map(_.manifest.docCount).sum)
 
-    val perPart = parts.map(p => search(spark, p, spec, Some(live)))
-    mergePartResults(perPart, spec)
+    // re-apply the final selection across the already-selected part results
+    selectBest(parts.flatMap(p => search(spark, p, spec, Some(live))).map(r =>
+      Candidate(r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score)).toArray, spec)
   }
-
-  /** Re-apply the final selection (comparator order, per-domain cap, total
-    * limit, per-domain recount) across parts — [[selectBest]] on
-    * already-selected part results. */
-  private def mergePartResults(perPart: Seq[Seq[SearchResult]],
-                               spec: QuerySpec): Seq[SearchResult] = {
-    val ordered = perPart.flatten
-      .sortBy(r => (!r.has_priority_term, r.score, r.ranking, r.url_id))
-    val domainCounts = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    val selected = scala.collection.mutable.ArrayBuffer.empty[SearchResult]
-    ordered.foreach { r =>
-      domainCounts(r.domain_id) += 1
-      if (domainCounts(r.domain_id) <= spec.limitByDomain) selected += r
-    }
-    val top = selected.take(spec.limitTotal)
-    val topCounts = top.groupBy(_.domain_id).map { case (d, rs) => d -> rs.size.toLong }
-    top.map(r => r.copy(results_from_domain = topCounts(r.domain_id))).toSeq
-  }
-}
-
-/** Just the bucket function, re-exported to avoid a package cycle. */
-private[query] object IndexBuilderRef {
-  def bucketOf(termHash: Long, numBuckets: Int): Int =
-    (((termHash % numBuckets) + numBuckets) % numBuckets).toInt
 }
 
 // ---- kernel-side plan (broadcast) ------------------------------------------
@@ -1142,6 +1094,27 @@ final case class KernelSpec(
 
 final case class Candidate(urlId: Int, domainId: Int, ranking: Int,
                            hasPrio: Boolean, score: Double)
+
+object Candidate {
+  /** The reference result order (IndexQueryService.selectBestResults:252-282
+    * + SearchResultPreliminaryScore.compareTo): priority-term hit first, then
+    * ascending score (lower is better; `java.lang.Double.compare` semantics),
+    * ascending ranking, ascending urlId. */
+  implicit val referenceOrder: Ordering[Candidate] =
+    Ordering.by(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
+
+  /** The reference's greedy per-domain cap over comparator-ordered
+    * candidates: a candidate is kept while its domain holds fewer than
+    * `limitByDomain` kept members. Lazy, so `take(k)` stops at k kept. */
+  def capped(ordered: Iterator[Candidate], limitByDomain: Int): Iterator[Candidate] = {
+    val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+    ordered.filter { c =>
+      val n = perDomain(c.domainId)
+      if (n < limitByDomain) perDomain(c.domainId) = n + 1
+      n < limitByDomain
+    }
+  }
+}
 
 /** Per-partition evaluation: block-max WAND over doc ranges; surviving ranges
   * are intersected with skip-pointer group decode, filtered, and scored. */
@@ -1176,24 +1149,6 @@ object QueryKernel {
         val i = java.util.Arrays.binarySearch(fullDecoded.docIds, doc)
         if (i >= 0) fullDecoded.metas(i) else 0L
       } else PostingCodec.lookup(blob, skip, doc)
-    /** Merge with another block of the same (term, range) — only reachable if
-      * a future layout salts within a range; decodes both. */
-    def merged(other: Block): Block = {
-      val a = full; val b = other.full
-      val n2 = a.length + b.length
-      val docs = new Array[Long](n2); val metas = new Array[Long](n2)
-      var i = 0; var j = 0; var k = 0
-      while (i < a.length && j < b.length) {
-        if (a.docIds(i) <= b.docIds(j)) { docs(k) = a.docIds(i); metas(k) = a.metas(i); i += 1 }
-        else { docs(k) = b.docIds(j); metas(k) = b.metas(j); j += 1 }
-        k += 1
-      }
-      while (i < a.length) { docs(k) = a.docIds(i); metas(k) = a.metas(i); i += 1; k += 1 }
-      while (j < b.length) { docs(k) = b.docIds(j); metas(k) = b.metas(j); j += 1; k += 1 }
-      val (blob2, skip2) = PostingCodec.encode(docs, metas)
-      val m = new Block(n2, math.max(maxPosCount, other.maxPosCount), blob2, skip2)
-      m
-    }
   }
 
   /** Monotonic merge cursor over one decoded posting list: for an ascending
@@ -1281,21 +1236,11 @@ object QueryKernel {
       if (limitTotal <= 0) return Double.NegativeInfinity // degenerate: nothing can enter
       if (!dirty) return math.min(cachedThreshold, seed)
       dirty = false
-      val ordered = all.sortBy(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
-      val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
-      var kept = 0
-      var last: Candidate = null
-      val it = ordered.iterator
-      while (it.hasNext && kept < limitTotal) {
-        val c = it.next()
-        if (perDomain(c.domainId) < limitByDomain) {
-          perDomain(c.domainId) += 1; kept += 1; last = c
-        }
-      }
+      val top = Candidate.capped(all.sorted.iterator, limitByDomain).take(limitTotal).toArray
       cachedThreshold =
-        if (kept < limitTotal) Double.PositiveInfinity
-        else if (last.hasPrio) Double.NegativeInfinity
-        else last.score
+        if (top.length < limitTotal) Double.PositiveInfinity
+        else if (top.last.hasPrio) Double.NegativeInfinity
+        else top.last.score
       math.min(cachedThreshold, seed) // seed: bound carried in from an earlier phase
     }
 
@@ -1304,18 +1249,7 @@ object QueryKernel {
       * results_from_domain counts beyond the cap are therefore clamped — the
       * reference counts the full candidate list (IndexQueryService:252-282),
       * which doesn't distribute; documented. */
-    def emit(): Iterator[Candidate] = {
-      val byScore = all.sortBy(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
-      val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
-      val keep = scala.collection.mutable.ArrayBuffer.empty[Candidate]
-      byScore.foreach { c =>
-        if (perDomain(c.domainId) < limitByDomain) {
-          keep += c
-          perDomain(c.domainId) += 1
-        }
-      }
-      keep.iterator
-    }
+    def emit(): Iterator[Candidate] = Candidate.capped(all.sorted.iterator, limitByDomain)
   }
 
   def evaluatePartition(spec: KernelSpec)(rows: Iterator[Row]): Iterator[Candidate] = {
@@ -1427,12 +1361,11 @@ object QueryKernel {
           r.getInt(r.fieldIndex("min_quality")),
           r.getInt(r.fieldIndex("max_topology")))
       } else {
+        // the build and SnapshotMerge write ONE block per (term, range); a
+        // second one is corrupt input — fail closed rather than guess
         val th = r.getLong(r.fieldIndex("term_hash"))
-        val b = blockOf(r)
-        byTerm.get(th) match {
-          case Some(prev) => byTerm(th) = prev.merged(b)
-          case None       => byTerm(th) = b
-        }
+        require(byTerm.put(th, blockOf(r)).isEmpty,
+          s"duplicate posting block for term_hash $th in doc_range $range")
       }
     }
     if (fwdMeta == null) return // no forward data for this range (empty)

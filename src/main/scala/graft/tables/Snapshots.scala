@@ -54,34 +54,122 @@ object Snapshots {
     s"""{"snapshotId":"${esc(m.snapshotId)}","docCount":${m.docCount},"numBuckets":${m.numBuckets},"docRangeShift":${m.docRangeShift},"stemming":${if (m.stemming) 1 else 0},"ngrams":${if (m.ngrams) 1 else 0},"stagesDone":$stages,"lineage":$rows}"""
   }
 
+  /** Inverse of [[manifestJson]]. Fails closed: malformed JSON, a string
+    * escape [[esc]] never writes, or a missing required field throws an
+    * IllegalArgumentException naming the problem (`stemming`/`ngrams` are
+    * optional — manifests written before those flags default to off). */
   def parseManifest(json: String): Manifest = {
-    def field(name: String): String = {
-      val p = ("\"" + name + "\"\\s*:\\s*").r
-      p.findFirstMatchIn(json) match {
-        case Some(m) =>
-          val rest = json.substring(m.end)
-          if (rest.startsWith("\"")) rest.drop(1).takeWhile(_ != '"')
-          else if (rest.startsWith("[")) {
-            var depth = 0; var i = 0
-            while ({ val c = rest(i); if (c == '[') depth += 1 else if (c == ']') depth -= 1; depth > 0 }) i += 1
-            rest.substring(1, i)
-          }
-          else rest.takeWhile(c => c.isDigit || c == '-' || c == '.')
-        case None => ""
-      }
+    val top = obj(new JsonReader(json).document(), "manifest")
+    val rows = arr(top, "lineage").map { v =>
+      val r = obj(v, "lineage row")
+      LineageRow(str(r, "stage"), num(r, "partitionId").toInt, num(r, "termRangeLo"),
+        num(r, "termRangeHi"), num(r, "docCount"), num(r, "postingBytes"),
+        num(r, "wallClockMs"))
     }
-    val lineageStr = field("lineage")
-    val rows = "\\{[^}]*\\}".r.findAllIn(lineageStr).map { obj =>
-      def num(n: String): Long = ("\"" + n + "\":(-?\\d+)").r.findFirstMatchIn(obj).map(_.group(1).toLong).getOrElse(0L)
-      def str(n: String): String = ("\"" + n + "\":\"([^\"]*)\"").r.findFirstMatchIn(obj).map(_.group(1)).getOrElse("")
-      LineageRow(str("stage"), num("partitionId").toInt, num("termRangeLo"), num("termRangeHi"),
-        num("docCount"), num("postingBytes"), num("wallClockMs"))
-    }.toSeq
-    val stages = "\"([^\"]+)\"".r.findAllMatchIn(field("stagesDone")).map(_.group(1)).toSeq
-    Manifest(field("snapshotId"), field("docCount").toLong, field("numBuckets").toInt,
-      field("docRangeShift").toInt, stages, rows,
-      stemming = field("stemming") == "1",
-      ngrams = field("ngrams") == "1")
+    Manifest(str(top, "snapshotId"), num(top, "docCount"), num(top, "numBuckets").toInt,
+      num(top, "docRangeShift").toInt,
+      arr(top, "stagesDone").map {
+        case s: String => s
+        case v => throw new IllegalArgumentException(s"manifest: stagesDone holds non-string $v")
+      },
+      rows,
+      stemming = top.get("stemming").exists(_ == 1L),
+      ngrams = top.get("ngrams").exists(_ == 1L))
+  }
+
+  private def field(o: Map[String, Any], name: String): Any =
+    o.getOrElse(name, throw new IllegalArgumentException(s"manifest: missing field '$name'"))
+  private def typed[A](o: Map[String, Any], name: String, kind: String)(
+      pf: PartialFunction[Any, A]): A =
+    pf.applyOrElse(field(o, name), (v: Any) =>
+      throw new IllegalArgumentException(s"manifest: field '$name' is not $kind: $v"))
+  private def str(o: Map[String, Any], name: String): String =
+    typed(o, name, "a string") { case s: String => s }
+  private def num(o: Map[String, Any], name: String): Long =
+    typed(o, name, "an integer") { case n: Long => n }
+  private def arr(o: Map[String, Any], name: String): Seq[Any] =
+    typed(o, name, "an array") { case a: Seq[Any] @unchecked => a }
+  private def obj(v: Any, what: String): Map[String, Any] = v match {
+    case m: Map[String, Any] @unchecked => m
+    case _ => throw new IllegalArgumentException(s"manifest: $what is not an object: $v")
+  }
+
+  /** The JSON subset [[manifestJson]] writes: objects, arrays, integers and
+    * strings with exactly the escapes of [[esc]] (quote, backslash, `n`, and
+    * `u` + four hex digits). Objects read as Map, arrays as Seq, integers as
+    * Long. */
+  private final class JsonReader(s: String) {
+    private var i = 0
+    private def fail(msg: String) =
+      throw new IllegalArgumentException(s"manifest: $msg at offset $i")
+    private def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
+    private def expect(c: Char): Unit = {
+      ws()
+      if (i >= s.length || s(i) != c) fail(s"expected '$c'")
+      i += 1
+    }
+    private def peek: Char = { ws(); if (i < s.length) s(i) else fail("unexpected end") }
+    private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+    def document(): Any = {
+      val v = value()
+      ws()
+      if (i != s.length) fail("trailing data")
+      v
+    }
+
+    private def value(): Any = peek match {
+      case '{' => members(); case '[' => elements(); case '"' => string()
+      case c if c == '-' || isDigit(c) => integer()
+      case c => fail(s"unexpected '$c'")
+    }
+
+    private def sequence[A](open: Char, close: Char)(item: => A): Seq[A] = {
+      expect(open)
+      val out = Seq.newBuilder[A]
+      if (peek == close) i += 1
+      else {
+        out += item
+        while (peek == ',') { i += 1; out += item }
+        expect(close)
+      }
+      out.result()
+    }
+    private def members(): Map[String, Any] =
+      sequence('{', '}') { val k = string(); expect(':'); k -> value() }.toMap
+    private def elements(): Seq[Any] = sequence('[', ']')(value())
+
+    private def integer(): Long = {
+      ws()
+      val start = i
+      if (i < s.length && s(i) == '-') i += 1
+      while (i < s.length && isDigit(s(i))) i += 1
+      s.substring(start, i).toLongOption.getOrElse(fail("bad integer"))
+    }
+
+    private def string(): String = {
+      expect('"')
+      val b = new StringBuilder
+      while (i < s.length && s(i) != '"') {
+        if (s(i) != '\\') { b += s(i); i += 1 }
+        else if (i + 1 >= s.length) fail("unterminated escape")
+        else {
+          s(i + 1) match {
+            case '"'  => b += '"'; i += 2
+            case '\\' => b += '\\'; i += 2
+            case 'n'  => b += '\n'; i += 2
+            case 'u' if i + 6 <= s.length =>
+              val hex = s.substring(i + 2, i + 6)
+              if (!hex.forall(c => Character.digit(c, 16) >= 0)) fail(s"bad escape \\u$hex")
+              b += Integer.parseInt(hex, 16).toChar; i += 6
+            case c => fail(s"unsupported escape \\$c")
+          }
+        }
+      }
+      if (i >= s.length) fail("unterminated string")
+      i += 1
+      b.result()
+    }
   }
 
   // -- snapshot lifecycle ----------------------------------------------------

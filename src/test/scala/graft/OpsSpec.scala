@@ -1123,4 +1123,24 @@ class OpsSpec extends AnyFunSuite {
     assert(got.map(_._1) === expected.map(_._1),
       s"post-append ADC ids diverge\n got=$got\n exp=$expected")
   }
+
+  test("appendIvfPqIndex: an empty batch leaves the stored index unchanged and queryable") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val emb = (0L until 256L).map(i =>
+      (i, Array.tabulate(16)(d => math.sin(i * 0.37 + d * 1.3).toFloat)))
+      .toDF("vec_id", "embedding")
+    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfpqe").toString
+    VectorOps.buildIvfPqIndex(emb, dir, k = 4, iters = 2, m = 4, kSub = 8)
+    def codes = spark.read.parquet(s"$dir/codes").collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1), r.getAs[Int]("cell"))).toSet
+    val q = emb.where(col("vec_id") === 1L)
+      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+    def top = VectorOps.ivfPqIndexTopK(spark, dir, q, 20, nProbe = 4)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val (codesBefore, topBefore) = (codes, top)
+    VectorOps.appendIvfPqIndex(emb.where(lit(false)), dir)
+    assert(codes === codesBefore)
+    assert(top === topBefore && topBefore.nonEmpty)
+  }
 }
